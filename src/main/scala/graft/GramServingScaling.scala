@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only measurement main (the r19 verdict ask #2): the suite-onboard
@@ -17,12 +16,7 @@ object GramServingScaling {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", "graft-gram-scaling")
     val dir = java.nio.file.Files.createTempDirectory("gramscale").toString
     val state = s"$dir/grams"
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only measurement main (the r17 verdict's optional ask #8): the
   * multi-suite decontamination cost curve as the SUITE COUNT grows.
@@ -22,12 +21,7 @@ object SuiteScaling {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", "graft-suite-scaling")
     // warm-up outside the timed region (the Bench convention)
     ops.TextOps.t174MultiSuiteDecontam(spark, sfDir).count()
     ops.CacheRegistry.harness.release()

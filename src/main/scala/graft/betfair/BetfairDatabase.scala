@@ -2,7 +2,8 @@ package graft.betfair
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Public API of the Spark-native betfair market index — the reference's
@@ -48,9 +49,7 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       fs.delete(new Path(indexPath), true)
     }
     val result = IndexPipeline.build(spark, databaseDir)
-    val deduped = result.index
-      .dropDuplicates("marketMetadataFilePath", "marketDataFilePath")
-    writeSnapshot(deduped)
+    writeSnapshot(result.index)
     result.counters
   }
 
@@ -135,25 +134,23 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
   }
 
   /** A16: drop index rows whose data file no longer exists. Returns the
-    * number of removed rows. Existence checks run in executors.
+    * number of removed rows, tallied inside the snapshot write. Existence
+    * checks run in executors.
     */
   def clean(): Long = {
-    val df = indexDF
-    val before = df.count()
-    import spark.implicits._
     val sconf = SerializableHadoopConf(spark)
-    val existing = df.mapPartitions { rows =>
-      val conf = sconf.value
-      var cachedFs: FileSystem = null
-      rows.filter { row =>
-        val p = new Path(row.getAs[String]("marketDataFilePath"))
-        if (cachedFs == null) cachedFs = p.getFileSystem(conf)
-        cachedFs.exists(p)
-      }
-    }(org.apache.spark.sql.Encoders.row(Schemas.indexSchema))
-      .toDF()
-    writeSnapshot(existing)
-    before - size
+    // nondeterministic: probed exactly once per row, never re-evaluated by
+    // a filter pushed below the projection
+    val dataExists = udf { (s: String) =>
+      val p = new Path(s); p.getFileSystem(sconf.value).exists(p)
+    }.asNondeterministic()
+    val removed = Observation()
+    writeSnapshot(indexDF
+      .withColumn("_exists", dataExists(col("marketDataFilePath")))
+      .observe(removed, count(when(!col("_exists"), true)).as("removed"))
+      .filter(col("_exists"))
+      .drop("_exists"))
+    removed.get("removed").asInstanceOf[Long]
   }
 
   /** A14/A15: incremental insert of a source directory with re-layout
@@ -163,12 +160,14 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
     * source build, the action split from the checkpointed plan.
     *
     * Dataflow, in three strictly ordered phases:
-    *   1. RESOLVE (pure reads): build the source-market DataFrame (same
-    *      pipeline), compute destination paths from the pattern column, and
-    *      resolve each market's (metadata action, data action) against the
-    *      CURRENT destination state (existence / row-equality / file-size,
-    *      reference betfairdatabase/market.py:135-198). The resolved plan is
-    *      checkpointed to parquet — after phase 2 moves the source files,
+    *   1. RESOLVE (pure reads): build the source-market index (same
+    *      pipeline) and checkpoint it, compute destination paths from the
+    *      pattern column, and resolve each market's (metadata action, data
+    *      action) against the CURRENT destination state (existence /
+    *      row-equality / file-size, reference
+    *      betfairdatabase/market.py:135-198); several source rows with one
+    *      destination file resolve to one placement. The resolved plan
+    *      is checkpointed to parquet — after phase 2 moves the source files,
     *      nothing may lazily recompute from them (task retries and cache
     *      eviction would otherwise re-read moved-away files).
     *   2. APPLY (side effects): execute the moves from the checkpointed plan
@@ -183,8 +182,12 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       onDuplicates: String = "update"): IndexPipeline.Counters = {
     require(Seq("skip", "replace", "update").contains(onDuplicates))
     if (!indexExists) index(force = false)
+    // the source build is checkpointed first: its write fills the build's
+    // tally, and nothing after it reads the source files that phase 2 moves
     val built = IndexPipeline.build(spark, sourceDir)
-    val src = built.index
+    val srcPath = s"$databaseDir/.graft_insert_src_tmp"
+    built.index.write.mode("overwrite").parquet(srcPath)
+    val src = spark.read.schema(Schemas.indexSchema).parquet(srcPath)
       .withColumn("_destDir",
         when(pattern.dir.isNull || pattern.dir === "", databaseDir)
           .otherwise(concat(lit(databaseDir + "/"), pattern.dir)))
@@ -195,17 +198,25 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       .withColumn("_destMeta", concat(col("_destDir"), lit("/"), col("_metaName")))
       .withColumn("_destData", concat(col("_destDir"), lit("/"), col("_dataName")))
 
+    val row = struct(Schemas.IndexColumns.filterNot(
+      c => c == "marketMetadataFilePath" || c == "marketDataFilePath")
+      .map(col): _*)
     val existing = indexDF
     val existingByMeta = existing
-      .select(Schemas.IndexColumns.filterNot(
-        c => c == "marketMetadataFilePath" || c == "marketDataFilePath")
-        .map(c => col(c).as(s"_ex_$c")) :+
-        col("marketMetadataFilePath").as("_destMeta"): _*)
-    val nonPathCols = Schemas.IndexColumns.filterNot(
-      c => c == "marketMetadataFilePath" || c == "marketDataFilePath")
+      .select(row.as("_ex"), col("marketMetadataFilePath").as("_destMeta"))
+    // Rows that share a metadata destination (the markets of one bulk
+    // metadata.json, a stem with two data files, one market file in two
+    // source dirs) meet in one window, ordered by data destination. The
+    // first row of each data destination is placed; a duplicate moves no
+    // file and is compared with the row before it, as a sequential import
+    // compares it with the market it just placed
+    val byMeta = Window.partitionBy("_destMeta")
+      .orderBy("_destData", "marketMetadataFilePath", "marketDataFilePath")
     val joined = src.join(existingByMeta, Seq("_destMeta"), "left_outer")
-      .withColumn("_rowMatches",
-        nonPathCols.map(c => col(c) <=> col(s"_ex_$c")).reduce(_ && _))
+      .withColumn("_placed",
+        !(lag(col("_destData"), 1).over(byMeta) <=> col("_destData")))
+      .withColumn("_rowMatches", row <=>
+        when(col("_placed"), col("_ex")).otherwise(lag(row, 1).over(byMeta)))
 
     // ---- phase 1: RESOLVE. Existence/size probes are executor-side pure
     // reads with the driver's Hadoop conf.
@@ -239,24 +250,35 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       case "update" => when(!col("_dataExists"), lit(true))
         .otherwise(col("_destDataLen") < lenUdf(col("marketDataFilePath")))
     }
+    val writesMeta = col("_placed") && col("_action") =!= "SKIP"
     val resolved = joined
-      .withColumn("_metaExists", existsUdf(col("_destMeta")))
+      .withColumn("_metaExists",
+        when(col("_placed"), existsUdf(col("_destMeta"))).otherwise(true))
       .withColumn("_destDataLen", lenUdf(col("_destData")))
       .withColumn("_dataExists", col("_destDataLen") >= 0)
       .withColumn("_action", actionCol)
-      .withColumn("_processData", processDataCol)
+      .withColumn("_processData", col("_placed") && processDataCol)
+      // a metadata file that several placed rows share is written by the
+      // first of them only, so no two tasks place it at once
+      .withColumn("_placeMeta", writesMeta && count(when(writesMeta, true))
+        .over(byMeta.rowsBetween(Window.unboundedPreceding, -1)) === 0)
       .select((Schemas.IndexColumns.map(col) ++
-        Seq(col("_destMeta"), col("_destData"), col("_action"),
-          col("_processData"))): _*)
+        Seq(col("_destMeta"), col("_destData"), col("_placed"), col("_action"),
+          col("_placeMeta"), col("_processData"))): _*)
 
-    // checkpoint: one row per source market — small next to the data files
+    // checkpoint: one row per source market — small next to the data files.
+    // Its write also tallies the action split
     val planPath = s"$databaseDir/.graft_insert_plan_tmp"
-    resolved.write.mode("overwrite").parquet(planPath)
-    val plan = spark.read.parquet(planPath)
+    val split = Observation()
+    def actionCount(a: String): Column = count(when(col("_action") === a, true)).as(a)
+    resolved.observe(split, actionCount("INSERT"), actionCount("UPDATE"),
+        actionCount("SKIP"))
+      .write.mode("overwrite").parquet(planPath)
+    val plan = spark.read.schema(resolved.schema).parquet(planPath)
 
     // ---- phase 2: APPLY, idempotently.
     val doCopy = copy
-    plan.filter(col("_action") =!= "SKIP" || col("_processData"))
+    plan.filter(col("_placeMeta") || col("_processData"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
         val conf = sconf.value
         rows.foreach { row =>
@@ -286,7 +308,7 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
                 throw new java.io.IOException(s"insert: rename $from -> $to failed")
             }
           }
-          if (row.getAs[String]("_action") != "SKIP")
+          if (row.getAs[Boolean]("_placeMeta"))
             place(row.getAs[String]("marketMetadataFilePath"), destMeta)
           if (row.getAs[Boolean]("_processData"))
             place(row.getAs[String]("marketDataFilePath"), destData)
@@ -294,7 +316,7 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
       }
 
     // ---- phase 3: MERGE from the checkpointed plan only.
-    val actions = plan.filter(col("_action") =!= "SKIP")
+    val actions = plan.filter(col("_placed") && col("_action") =!= "SKIP")
     val newRows = actions
       .withColumn("marketMetadataFilePath", col("_destMeta"))
       .withColumn("marketDataFilePath", col("_destData"))
@@ -304,14 +326,12 @@ class BetfairDatabase(spark: SparkSession, databaseDir: String) {
         Seq("marketMetadataFilePath"), "left_anti")
       .unionByName(newRows)
       .dropDuplicates("marketMetadataFilePath", "marketDataFilePath")
-    // one pass over the (tiny, one-row-per-market) plan for the action split
-    val actionCounts = plan.groupBy("_action").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val updated = actionCounts.getOrElse("UPDATE", 0L)
-    val skipped = actionCounts.getOrElse("SKIP", 0L)
-    val inserted = actionCounts.getOrElse("INSERT", 0L) + updated
     writeSnapshot(merged)
+    val n = split.get.view.mapValues(_.asInstanceOf[Long])
+    val (updated, skipped) = (n("UPDATE"), n("SKIP"))
+    val inserted = n("INSERT") + updated
     fs.delete(new Path(planPath), true)
+    fs.delete(new Path(srcPath), true)
     built.counters.copy(rowsInserted = inserted, marketsUpdated = updated,
       marketsSkipped = skipped)
   }

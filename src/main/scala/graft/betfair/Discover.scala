@@ -13,10 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                           suffix; > 8 chars means "market id digits")
   * plus directory-level bulk `metadata.json`.
   *
-  * Listing runs on the driver via the Hadoop FileSystem (works for file://,
-  * hdfs://, s3a://...). This is metadata-only traversal — the same shape the
-  * reference uses — and the resulting path table is tiny relative to data
-  * (one row per file); all heavy I/O stays distributed.
+  * Listing runs via the Hadoop FileSystem (works for file://, hdfs://,
+  * s3a://...), on the driver or, for many top-level dirs, in executors.
+  * Metadata-only traversal — the reference's shape — gives a path table
+  * tiny next to the data (one row per file); heavy I/O stays distributed.
   */
 object Discover {
 
@@ -78,13 +78,14 @@ object Discover {
       spark.createDataset(buf.toSeq).toDF()
     } else {
       // distributed listing: executors walk one subtree each, with the
-      // driver's Hadoop conf (credentials/defaultFS) shipped along
+      // driver's Hadoop conf (credentials/defaultFS) shipped along; no
+      // shuffle, the listing runs in the stage that reads the entries
       val sconf = SerializableHadoopConf(spark)
       val rootFiles = files.filter(_.isFile)
         .flatMap(st => classify(PathCanon.canonical(st.getPath, strip))).toSeq
       val subdirs = dirs.map(_.getPath.toString).toSeq
-      val listed = spark.createDataset(subdirs)
-        .repartition(math.min(subdirs.length, 256))
+      val listed = spark.sparkContext
+        .parallelize(subdirs, math.min(subdirs.length, 256))
         .mapPartitions { paths =>
           val conf = sconf.value
           paths.flatMap { p =>
@@ -100,7 +101,7 @@ object Discover {
             out
           }
         }
-      listed.toDF().unionByName(spark.createDataset(rootFiles).toDF())
+      spark.createDataset(listed).union(spark.createDataset(rootFiles)).toDF()
     }
   }
 }

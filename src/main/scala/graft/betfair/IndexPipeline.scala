@@ -1,13 +1,24 @@
 package graft.betfair
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row,
+  SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType, StructType}
 import Schemas._
 
-/** The index-build dataflow (SURVEY.md §3.2): discover → pair → parse →
-  * flatten → derive → racing join → 37-column projection. One lazy plan; the
-  * only shuffle is the (broadcast) racing join and the final write.
+/** The index-build dataflow (SURVEY.md §3.2) as one lazy plan: discover →
+  * one aggregation per market stem pairs data with metadata, applies bulk
+  * precedence, runs A4 extraction and tags every outcome → flatten → racing
+  * window → tally → 37-column projection. Two shuffles, no cache, no count:
+  * the A20 counters are an [[Observation]] filled in by the action that
+  * writes `index`, in its result stage (each task counts once under retry).
+  * Write `index` with no further shuffle: AQE drops a stage that produced
+  * no rows from the final plan, and the metrics observed inside it too.
   */
 object IndexPipeline {
 
@@ -28,7 +39,28 @@ object IndexPipeline {
         marketsWithoutMetadata + corruptFiles
   }
 
-  case class BuildResult(index: DataFrame, counters: Counters)
+  /** The lazy index and the tally observed on it. Read `counters` after an
+    * action over `index` (or a plan built on it) has completed; before, it
+    * fails with an IllegalStateException.
+    */
+  case class BuildResult(index: DataFrame, tally: Observation) {
+    def counters: Counters = {
+      // the tally arrives from a listener shortly after the action returns
+      try Await.ready(tally.future, 1.minute)
+      catch { case _: TimeoutException => throw new IllegalStateException(
+        "index counters read before an action over the index completed") }
+      val n = tally.get.view.mapValues(_.asInstanceOf[Long])
+      Counters(n("totalMarkets"), n("marketsWithoutData"),
+        n("marketsWithoutMetadata"), n("corruptFiles"), n("rowsInserted"))
+    }
+  }
+
+  /** Outcome tags: the A4 extraction's own ok | missing | corrupt, and
+    * metadata without data. */
+  private val Indexed = "ok"
+  private val WithoutMetadata = "missing"
+  private val Corrupt = "corrupt"
+  private val WithoutData = "noData"
 
   private val localTimeUdf: UserDefinedFunction =
     udf((ts: String, tz: String) => Functions.localTimeString(ts, tz))
@@ -44,151 +76,146 @@ object IndexPipeline {
   private def canonPathUdf(strip: Boolean): UserDefinedFunction =
     udf((s: String) => PathCanon.canonicalUri(s, strip))
 
-  /** Read per-market metadata JSON files (catalogue or definition, one object
-    * per file — multiLine tolerates pretty-printing, PERMISSIVE routes
-    * corrupt bodies to _corrupt_record; reference A22).
-    *
-    * The file set comes from a recursive glob scan of the tree, NOT a
-    * driver-collected path list — a 100 TB archive has millions of metadata
-    * files, and both the driver array and the serialized path list in the
-    * scan would be the bottleneck. Spark parallelizes the listing above
-    * `parallelPartitionDiscovery.threshold` dirs; the downstream inner join
-    * on the canonical path keeps exactly the paired markets.
+  /** Read the metadata JSON files named by `glob` (an object per market
+    * file, an array per bulk metadata.json, A3). multiLine tolerates
+    * pretty-printing, PERMISSIVE routes corrupt bodies to _corrupt_record
+    * (A22). The files come from a recursive glob scan, NOT a driver path
+    * list — a 100 TB archive has millions of them; Spark parallelizes the
+    * listing above `parallelPartitionDiscovery.threshold` dirs.
     */
-  private def readPerMarket(spark: SparkSession, dir: String): DataFrame =
+  private def readMetadata(spark: SparkSession, dir: String,
+      glob: String): DataFrame =
     spark.read
       .schema(metadataSchema)
       .option("multiLine", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "1.*.json")
+      .option("pathGlobFilter", glob)
       .json(dir)
       .withColumn("metaPath",
         canonPathUdf(PathCanon.stripFileScheme(
           spark.sparkContext.hadoopConfiguration))(input_file_name()))
 
-  /** Read bulk metadata.json files (JSON arrays of metadata dicts; A3) —
-    * same recursive glob scan as [[readPerMarket]].
+  private val record: Column =
+    struct(metadataSchema.fieldNames.toSeq.map(col): _*)
+
+  /** One counted outcome: tag, first outcome of a discovered market, and
+    * the paths and metadata (record, or extracted JSON) if indexed. */
+  private val outcomeSchema = new StructType()
+    .add("_tag", StringType).add("_market", BooleanType)
+    .add("metaPath", StringType).add("_dataPath", StringType)
+    .add("m", metadataSchema).add("json", StringType)
+
+  /** Outcomes of one stem, one per data file (reference
+    * processor.py:147-193, A2-A4): a bulk record indexes each and leaves a
+    * metadata file of the stem without data; else a metadata file indexes
+    * each, or is corrupt when its record is or when it parsed to none (an
+    * empty file: json.load raises); else A4 extraction. Metadata alone is
+    * without data; a bulk file's corrupt records are corrupt, not markets.
+    * The first outcome of a discovered stem carries the market mark.
     */
-  private def readBulk(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .schema(metadataSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "metadata.json")
-      .json(dir)
-      .withColumn("metaPath",
-        canonPathUdf(PathCanon.stripFileScheme(
-          spark.sparkContext.hadoopConfiguration))(input_file_name()))
-
-  /** Parse extracted definition JSON strings (from MarketDefExtract). */
-  private def parseExtracted(extracted: DataFrame): DataFrame = {
-    val parsed = extracted
-      .filter(col("outcome") === "ok")
-      .withColumn("m", from_json(col("json"),
-        metadataSchema.asInstanceOf[org.apache.spark.sql.types.StructType]))
-    parsed.select(
-      (metadataSchema.fieldNames.filterNot(_ == "_corrupt_record")
-        .map(f => col(s"m.$f").as(f)) :+
-        lit(null).cast("string").as("_corrupt_record") :+
-        col("metaPath") :+ col("stem").as("_stem") :+
-        col("dataPath").as("_dataPath")): _*)
+  private def outcomes(extract: (String, String) => MarketDefExtract.Extracted)(
+      r: Row): Seq[Row] = {
+    val stem = r.getAs[String]("stem")
+    val metaPath = r.getAs[String]("metaPath")
+    val dataPaths = r.getAs[collection.Seq[String]]("dataPaths")
+    val bulk = r.getAs[Row]("bulk")
+    val metaFile = r.getAs[collection.Seq[Row]]("metaFile")
+    def out(tag: String, metaPath: String, dataPath: String = null,
+        m: Row = null, json: String = null): Row =
+      Row(tag, false, metaPath, dataPath, m, json)
+    val readable = metaFile.nonEmpty && metaFile.forall(
+      _.isNullAt(metadataSchema.fieldIndex("_corrupt_record")))
+    val perData = dataPaths.toSeq.map { dp =>
+      if (bulk != null) out(Indexed, bulk.getString(0), dp, bulk.getStruct(1))
+      else if (metaPath == null) {
+        val e = extract(stem, dp)
+        out(e.outcome, e.metaPath, dp, json = e.json)
+      } else if (readable) out(Indexed, metaPath, dp, metaFile.head)
+      else out(Corrupt, metaPath, dp)
+    }
+    val market = perData ++ (if (metaPath != null &&
+      (dataPaths.isEmpty || bulk != null)) Seq(out(WithoutData, metaPath)) else Nil)
+    market.take(1).map(h => Row.fromSeq(h.toSeq.updated(1, true))) ++
+      market.drop(1) ++
+      Seq.fill(r.getAs[Long]("bulkCorrupt").toInt)(out(Corrupt, stem))
   }
 
-  /** Build the full index DataFrame for a source directory. Returns the
-    * 37-column index plus audit counters.
+  /** The 37-column index of a source directory and its A20 tally. Nothing
+    * runs here: the counters are filled in by the first action over the
+    * returned `index`, so read them after it.
     */
   def build(spark: SparkSession, sourceDir: String,
       writeMetadataFiles: Boolean = true): BuildResult = {
-    import spark.implicits._
     Functions.register(spark)
     // the recursive JSON scans below hit Spark's session FileStatusCache
     // (no TTL): a rebuild after extraction wrote new metadata files would
     // otherwise see the previous listing
     spark.catalog.refreshByPath(sourceDir)
 
-    val entries = Discover.scan(spark, sourceDir).cache()
-    val meta = entries.filter(col("kind") === "metadata")
-      .select(col("stem"), col("path").as("metaPath"))
-    val data = entries.filter(col("kind") === "data")
-      .select(col("stem"), col("path").as("dataPath"), col("dir"))
+    // ---- every input keyed by its market stem: discovered files (A1),
+    // metadata records, bulk records (paired within their directory, A3)
+    val files = Discover.scan(spark, sourceDir)
+      .filter(col("kind").isin("metadata", "data"))
+      .select(col("stem"), col("kind"), col("path"))
+    val perMarket = readMetadata(spark, sourceDir, "1.*.json")
+      .select(regexp_replace(col("metaPath"), "\\.json$", "").as("stem"),
+        lit("metaFile").as("kind"), col("metaPath").as("path"), record.as("m"))
+    // a bulk record's position: a multiLine JSON file is never split, so one
+    // task reads it whole and the ids rise in file order
+    val bulkCorrupt = col("_corrupt_record").isNotNull
+    val bulk = readMetadata(spark, sourceDir, "metadata.json")
+      .filter(bulkCorrupt || col("marketId").isNotNull)
+      .select(when(bulkCorrupt, col("metaPath")).otherwise(concat(regexp_replace(
+          col("metaPath"), "metadata\\.json$", ""), col("marketId"))).as("stem"),
+        when(bulkCorrupt, "bulkCorrupt").otherwise("bulk").as("kind"),
+        col("metaPath").as("path"), record.as("m"),
+        monotonically_increasing_id().as("pos"))
 
-    // ---- A3 bulk metadata: explode arrays, pair within the same directory,
-    // take precedence over per-market files (consume the data file).
-    // (.cache(): Spark disallows querying only _corrupt_record off a raw
-    // JSON scan; the parsed result must be materialized first.)
-    val bulkRaw = readBulk(spark, sourceDir).cache()
-    val bulkValid = bulkRaw
-      .filter(col("_corrupt_record").isNull && col("marketId").isNotNull)
-      // reference: file_cache keyed by marketId — last entry per id wins
-      .withColumn("_dir", regexp_replace(col("metaPath"), "/metadata\\.json$", ""))
-      .withColumn("_stemWanted", concat(col("_dir"), lit("/"), col("marketId")))
-      .dropDuplicates("_stemWanted")
-    val bulkPaired = bulkValid.join(data,
-        bulkValid("_stemWanted") === data("stem"))
-      .withColumn("_stem", col("stem"))
-      .withColumn("_dataPath", col("dataPath"))
-      .drop("stem", "dataPath", "dir", "_dir", "_stemWanted")
-    val consumedStems = bulkPaired.select(col("_stem").as("stem")).distinct()
+    def of(kind: String, c: Column): Column = when(col("kind") === kind, c)
+    val stems = files.unionByName(perMarket, allowMissingColumns = true)
+      .unionByName(bulk, allowMissingColumns = true)
+      .groupBy("stem")
+      .agg(
+        max(of("metadata", col("path"))).as("metaPath"),
+        collect_list(of("data", col("path"))).as("dataPaths"),
+        // reference: file_cache keyed by marketId — last entry per id wins
+        max_by(of("bulk", struct(col("path"), col("m"))), of("bulk", col("pos")))
+          .as("bulk"),
+        collect_list(of("metaFile", col("m"))).as("metaFile"),
+        count(of("bulkCorrupt", lit(true))).as("bulkCorrupt"))
 
-    // ---- data/metadata pairing after bulk consumption (A2)
-    val dataFree = data.join(consumedStems, Seq("stem"), "left_anti")
-    val pairedMeta = meta.join(dataFree, Seq("stem"))
-    val metaWithoutData = meta.join(dataFree, Seq("stem"), "left_anti")
+    val sconf = SerializableHadoopConf(spark)
+    val tagged = stems.mapPartitions { rows =>
+      val extract = MarketDefExtract.extractFile(sconf.value, new ObjectMapper(),
+        writeMetadataFiles) _
+      rows.flatMap(outcomes(extract))
+    }(Encoders.row(outcomeSchema))
+      .withColumn("m", coalesce(col("m"), from_json(col("json"), metadataSchema)))
+      .select(col("m.*"), col("metaPath"), col("_dataPath"), col("_tag"),
+        col("_market"))
 
-    // ---- A4: definitions for data files with no per-market metadata
-    val dataNoMeta = dataFree.join(meta, Seq("stem"), "left_anti")
-      .select(col("stem"), col("dataPath")).as[(String, String)]
-    val extracted = MarketDefExtract
-      .extract(spark, dataNoMeta, writeMetadataFiles).cache()
-    val extractedDefs = parseExtracted(extracted)
-
-    // ---- per-market metadata reads (A5-A9): recursive glob scan, no
-    // driver-side path collection; the inner join below narrows to paired
-    val perMarketRaw = readPerMarket(spark, sourceDir).cache()
-    val pathPairs = pairedMeta
-      .select(col("metaPath"), col("stem").as("_stem"),
-        col("dataPath").as("_dataPath"))
-    val perMarket = perMarketRaw.join(pathPairs, Seq("metaPath"))
-
-    val unified = perMarket.unionByName(bulkPaired)
-      .unionByName(extractedDefs)
-
-    val corrupt = unified.filter(col("_corrupt_record").isNotNull)
-    val good = unified.filter(col("_corrupt_record").isNull)
-
-    val flat = flatten(good)
-    val withRacing = racingJoin(flat)
-    // cache: the caller both counts (counters, invariant) and writes the
-    // index; without this the whole parse+join pipeline runs twice
-    val index = project(withRacing).cache()
-
-    // ---- counters (A20): total = |data ∪ metadata| stems before bulk
-    // consumption (reference: betfairdatabase/processor.py:147-149)
-    val totalMarkets = entries.filter(col("kind").isin("metadata", "data"))
-      .select("stem").distinct().count()
-    val cWithoutData = metaWithoutData.count()
-    val cWithoutMeta = extracted.filter(col("outcome") === "missing").count()
-    // a paired metadata file that produced NO parsed row (empty/whitespace
-    // file — nothing for PERMISSIVE mode to route to _corrupt_record) is a
-    // parse error in the reference (json.load raises; "Error parsing …") —
-    // count it corrupt or the market vanishes from the audit entirely
-    val unreadableMeta = pathPairs
-      .join(perMarketRaw.select("metaPath"), Seq("metaPath"), "left_anti")
-    val cCorrupt = corrupt.count() +
-      extracted.filter(col("outcome") === "corrupt").count() +
-      bulkRaw.filter(col("_corrupt_record").isNotNull).count() +
-      unreadableMeta.count()
-    val inserted = index.count()
-    BuildResult(index,
-      Counters(totalMarkets, cWithoutData, cWithoutMeta, cCorrupt, inserted))
+    // ---- counters (A20): every outcome rides through the racing window to
+    // the tally past the last shuffle; total = discovered data/metadata
+    // stems before bulk consumption (reference processor.py:147-149)
+    def outcomeCount(tag: String): Column = count(when(col("_tag") === tag, true))
+    val tally = Observation()
+    val index = racingJoin(flatten(tagged))
+      .observe(tally,
+        count(when(col("_market"), true)).as("totalMarkets"),
+        outcomeCount(WithoutData).as("marketsWithoutData"),
+        outcomeCount(WithoutMetadata).as("marketsWithoutMetadata"),
+        outcomeCount(Corrupt).as("corruptFiles"),
+        outcomeCount(Indexed).as("rowsInserted"))
+      .filter(col("_tag") === Indexed)
+      .select(IndexColumns.map(col): _*) // A12: the 37-column contract, in order
+    BuildResult(index, tally)
   }
 
   /** A5-A9 + A12 flattening: one wide select with catalogue/definition
-    * branches chosen per row (`numberOfWinners` present => definition).
+    * branches chosen per row (`numberOfWinners` present => definition). The
+    * outcome tag and market mark pass through.
     */
   private[betfair] def flatten(df: DataFrame): DataFrame = {
     val isDef = col("numberOfWinners").isNotNull
@@ -259,13 +286,16 @@ object IndexPipeline {
         localTimeUdf(marketSettledTime, eventTimezone))
         .as("localMarketSettledTime"),
       col("metaPath").as("marketMetadataFilePath"),
-      col("_dataPath").as("marketDataFilePath"))
+      col("_dataPath").as("marketDataFilePath"),
+      col("_tag"), col("_market"))
   }
 
   /** A10/A11: race metadata from WIN-market names, propagated to all markets
-    * of the same race via broadcast left join on the race key
-    * (eventTypeId,countryCode,venue,marketTime — reference
-    * betfairdatabase/racing.py:86-113).
+    * of the same race (eventTypeId,countryCode,venue,marketTime — reference
+    * betfairdatabase/racing.py:86-113) by a window over the race key. Rows
+    * without a race key (non-racing markets, outcomes that index nothing)
+    * each form their own window partition, so they do not pile onto one
+    * task.
     */
   private[betfair] def racingJoin(flat: DataFrame): DataFrame = {
     val racing = col("eventTypeId").isin(RacingEventTypeIds: _*)
@@ -276,26 +306,20 @@ object IndexPipeline {
       when(racing && keyValid,
         concat_ws(",", col("eventTypeId"), col("eventCountryCode"),
           col("eventVenue"), col("marketStartTime"))))
-    val winSide = withKey
-      .filter(col("_raceKey").isNotNull && col("marketType") === "WIN" &&
-        col("marketName").isNotNull)
-      .withColumn("_rm", raceMetaUdf(col("marketName")))
-      .groupBy(col("_raceKey").as("_winKey"))
-      // deterministic last-writer (reference dict is insertion-order-last)
-      .agg(max_by(col("_rm"), col("marketMetadataFilePath")).as("_rm"))
-    withKey.join(broadcast(winSide),
-        withKey("_raceKey") === winSide("_winKey"), "left_outer")
-      .withColumn("raceId", when(col("_winKey").isNotNull, col("_raceKey")))
-      .withColumn("raceTypeFromName",
-        when(col("_winKey").isNotNull, col("_rm._1")))
-      .withColumn("raceDistanceMeters",
-        when(col("_winKey").isNotNull, col("_rm._2")))
-      .withColumn("raceDistanceFurlongs",
-        when(col("_winKey").isNotNull, col("_rm._3")))
-      .drop("_raceKey", "_winKey", "_rm")
+    val isWin = col("_raceKey").isNotNull && col("marketType") === "WIN" &&
+      col("marketName").isNotNull
+    val race = Window.partitionBy(col("_raceKey"), when(col("_raceKey").isNull,
+      coalesce(col("marketDataFilePath"), col("marketMetadataFilePath"))))
+    withKey
+      // deterministic last-writer (reference dict is insertion-order-last);
+      // null when the race has no WIN market
+      .withColumn("_win", max_by(
+        when(isWin, struct(raceMetaUdf(col("marketName")).as("rm"))),
+        when(isWin, col("marketMetadataFilePath"))).over(race))
+      .withColumn("raceId", when(col("_win").isNotNull, col("_raceKey")))
+      .withColumn("raceTypeFromName", col("_win.rm._1"))
+      .withColumn("raceDistanceMeters", col("_win.rm._2"))
+      .withColumn("raceDistanceFurlongs", col("_win.rm._3"))
+      .drop("_raceKey", "_win")
   }
-
-  /** A12: the fixed 37-column contract projection, in order. */
-  private[betfair] def project(df: DataFrame): DataFrame =
-    df.select(IndexColumns.map(col): _*)
 }

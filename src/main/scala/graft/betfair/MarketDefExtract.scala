@@ -145,53 +145,56 @@ object MarketDefExtract {
     }
   }
 
-  /** Extract the definition for every (stem, dataPath) row; optionally write
+  /** Extract one data file's definition (executor side); optionally write
     * the `<id>.json` metadata file beside the data file (reference parity).
     */
+  private[betfair] def extractFile(conf: Configuration, mapper: ObjectMapper,
+      writeMetadataFiles: Boolean)(stem: String, dataPath: String): Extracted = {
+    val p = new Path(dataPath)
+    val name = p.getName
+    val metaPath = stem + ".json"
+    try {
+      val fs = p.getFileSystem(conf)
+      val line =
+        if (name.endsWith(".gz") || name.endsWith(".bz2") ||
+          name.endsWith(".zip")) {
+          val in = openDecompressed(fs, p, name, conf)
+          try lastMarkerLine(in) finally in.close()
+        } else {
+          val len = fs.getFileStatus(p).getLen
+          lastMarkerLinePlaintext(fs, p, len)
+        }
+      if (line == null) Extracted(dataPath, stem, metaPath, "missing", null)
+      else {
+        val root = mapper.readTree(line)
+        val mc0 = root.get("mc").get(0)
+        val defNode = mc0.get(Marker).asInstanceOf[ObjectNode]
+        defNode.put("marketId", mc0.get("id").asText())
+        val json = mapper.writeValueAsString(defNode)
+        if (writeMetadataFiles) {
+          val out = new Path(metaPath)
+          if (!fs.exists(out)) {
+            val os = fs.create(out, true)
+            try os.write(json.getBytes(StandardCharsets.UTF_8))
+            finally os.close()
+          }
+        }
+        Extracted(dataPath, stem, metaPath, "ok", json)
+      }
+    } catch {
+      case _: Exception =>
+        Extracted(dataPath, stem, metaPath, "corrupt", null)
+    }
+  }
+
+  /** Extract the definition for every (stem, dataPath) row. */
   def extract(spark: SparkSession, files: Dataset[(String, String)],
       writeMetadataFiles: Boolean): DataFrame = {
     import spark.implicits._
     val sconf = SerializableHadoopConf(spark)
     files.mapPartitions { it =>
-      val conf = sconf.value
-      val mapper = new ObjectMapper()
-      it.map { case (stem, dataPath) =>
-        val p = new Path(dataPath)
-        val name = p.getName
-        val metaPath = stem + ".json"
-        try {
-          val fs = p.getFileSystem(conf)
-          val line =
-            if (name.endsWith(".gz") || name.endsWith(".bz2") ||
-              name.endsWith(".zip")) {
-              val in = openDecompressed(fs, p, name, conf)
-              try lastMarkerLine(in) finally in.close()
-            } else {
-              val len = fs.getFileStatus(p).getLen
-              lastMarkerLinePlaintext(fs, p, len)
-            }
-          if (line == null) Extracted(dataPath, stem, metaPath, "missing", null)
-          else {
-            val root = mapper.readTree(line)
-            val mc0 = root.get("mc").get(0)
-            val defNode = mc0.get(Marker).asInstanceOf[ObjectNode]
-            defNode.put("marketId", mc0.get("id").asText())
-            val json = mapper.writeValueAsString(defNode)
-            if (writeMetadataFiles) {
-              val out = new Path(metaPath)
-              if (!fs.exists(out)) {
-                val os = fs.create(out, true)
-                try os.write(json.getBytes(StandardCharsets.UTF_8))
-                finally os.close()
-              }
-            }
-            Extracted(dataPath, stem, metaPath, "ok", json)
-          }
-        } catch {
-          case _: Exception =>
-            Extracted(dataPath, stem, metaPath, "corrupt", null)
-        }
-      }
+      val one = extractFile(sconf.value, new ObjectMapper(), writeMetadataFiles) _
+      it.map { case (stem, dataPath) => one(stem, dataPath) }
     }.toDF()
   }
 }

@@ -1,6 +1,6 @@
 package graft.betfair
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -262,6 +262,49 @@ class BetfairDatabaseSpec extends SparkSpec {
     assert(replaced.getAs[String]("marketName") == "8f Mdn")
   }
 
+  test("insert: one market in two source subdirectories is placed once") {
+    val (dbDir, db) = freshDb()
+    db.index()
+    val srcDir = Fixtures.tempDir("graftsrctwice")
+    for (sub <- Seq("a", "b")) {
+      Fixtures.write(srcDir.resolve(s"$sub/1.300000020.json"),
+        Fixtures.catalogueJson("1.300000020", "5f Hcap", "WIN", "7",
+          "Horse Racing", "Bath", eventId = "31000020"))
+      Fixtures.writeLines(srcDir.resolve(s"$sub/1.300000020"),
+        Seq("""{"op":"mcm","mc":[{"id":"1.300000020","rc":[]}]}"""))
+    }
+    val before = db.size
+    // both copies map to one destination: the first is placed, the second
+    // counts as a skip of an identical market (reference sequential import)
+    val ins = db.insert(srcDir.toString, copy = true,
+      pattern = ImportPatterns.betfairHistorical, onDuplicates = "update")
+    assert(db.size == before + ins.marketsAdded)
+    assert(ins.marketsAdded == 1 && ins.marketsSkipped == 1 &&
+      ins.marketsUpdated == 0)
+    assert(ins.consistent)
+    assert(Files.exists(dbDir.resolve("2023/Jun/1/31000020/1.300000020")))
+  }
+
+  test("insert: every market of a bulk metadata.json is placed") {
+    val (dbDir, db) = freshDb()
+    db.index()
+    val srcDir = Files.createDirectories(
+      Fixtures.tempDir("graftsrcbulk").resolve("bulk"))
+    val files = Files.list(Paths.get("src/test/resources/datasets/bulk_metadata"))
+    try files.forEach(f => Files.copy(f, srcDir.resolve(f.getFileName.toString)))
+    finally files.close()
+    val before = db.size
+    // three markets share metadata.json, the fourth has its own file; all
+    // four map to the database root under the flat pattern
+    val ins = db.insert(srcDir.toString, copy = true,
+      pattern = ImportPatterns.flat)
+    assert(ins.marketsAdded == 4)
+    assert(db.size == before + 4)
+    assert(ins.consistent)
+    assert(Files.exists(dbDir.resolve("metadata.json")))
+    assert(Files.exists(dbDir.resolve("1.201590187.zip")))
+  }
+
   test("zip-lzma stream files decode via commons-compress") {
     val dir = Fixtures.tempDir("graftlzma")
     val in = getClass.getResourceAsStream("/1.600000001.zip")
@@ -299,5 +342,46 @@ class BetfairDatabaseSpec extends SparkSpec {
       .collect().head
     assert(r.getAs[String]("marketName") == "Bulk WIN")
     assert(r.getAs[String]("marketMetadataFilePath").endsWith("metadata.json"))
+  }
+
+  test("bulk metadata.json: the later record of a repeated market wins") {
+    val dir = Fixtures.tempDir("graftbulkdup")
+    val earlier = Fixtures.catalogueJson("1.400000011", "Earlier", "WIN", "7",
+      "Horse Racing", "Ascot")
+    val later = Fixtures.catalogueJson("1.400000011", "Later", "WIN", "7",
+      "Horse Racing", "Ascot")
+    val other = Fixtures.catalogueJson("1.400000012", "Other", "PLACE", "7",
+      "Horse Racing", "Ascot")
+    Fixtures.write(dir.resolve("bulk/metadata.json"),
+      s"[$earlier,$other,$later]")
+    for (id <- Seq("1.400000011", "1.400000012"))
+      Fixtures.writeLines(dir.resolve(s"bulk/$id"),
+        Seq(s"""{"op":"mcm","mc":[{"id":"$id","rc":[]}]}"""))
+    val db = new BetfairDatabase(spark, dir.toString)
+    val c = db.index()
+    assert(c.rowsInserted == 2 && c.consistent)
+    val names = db.indexDF.filter(col("marketId") === "1.400000011")
+      .select("marketName").collect().map(_.getString(0)).toSeq
+    assert(names == Seq("Later"))
+  }
+
+  test("counters of trees that index nothing: empty, orphans only") {
+    val empty = Fixtures.tempDir("graftempty")
+    val db = new BetfairDatabase(spark, empty.toString)
+    assert(db.index() == IndexPipeline.Counters(0, 0, 0, 0, 0))
+    assert(db.size == 0)
+    val orphans = Fixtures.tempDir("graftorphans")
+    Fixtures.write(orphans.resolve("1.500000001.json"),
+      Fixtures.catalogueJson("1.500000001", "Orphan", "WIN", "7",
+        "Horse Racing", "Epsom"))
+    Fixtures.write(orphans.resolve("1.500000002.json"), "")
+    val c = new BetfairDatabase(spark, orphans.toString).index()
+    assert(c == IndexPipeline.Counters(2, 2, 0, 0, 0))
+    assert(c.consistent)
+    // an insert whose source indexes nothing adds nothing
+    val ins = db.insert(orphans.toString, copy = true,
+      pattern = ImportPatterns.flat)
+    assert(ins == IndexPipeline.Counters(2, 2, 0, 0, 0))
+    assert(db.size == 0)
   }
 }

@@ -11,17 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production deployment hook; ExtensionsSpec proves injection
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the production deployment hook; ExtensionsSpec proves injection
+  lazy val session: SparkSession = graft.GraftSession("local[4]", "graft-test",
+    "spark.sql.extensions" -> "graft.GraftExtensions")
 }
